@@ -14,6 +14,15 @@ import sys
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """Driver heap that fits the machine: physical memory minus 4g left to
+    the OS, the JVM's native memory and the Python workers, capped at 16g
+    — a heap larger than RAM turns a clean JVM OOM into a kernel
+    OOM-kill."""
+    phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(16, phys_gb - 4))}g"
+
+
 def get_spark(
     app: str = "ngxspark",
     master: str | None = None,
@@ -29,7 +38,7 @@ def get_spark(
     # harness in r7. Respect an explicit override.
     os.environ.setdefault("PYSPARK_PYTHON", sys.executable)
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
         master = f"local[{cores}]"
     if shuffle_partitions is None:
@@ -45,7 +54,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("NGXSPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("NGXSPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )

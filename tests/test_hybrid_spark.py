@@ -6,20 +6,7 @@ class — including formats with >9 capture groups (double-digit $NN
 backreferences in the regexp_replace extraction).
 """
 
-import pytest
 from pyspark.sql import functions as F
-
-
-@pytest.fixture(autouse=True)
-def _force_opt_in_tiers(monkeypatch):
-    # the OPT-IN split-chain and JVM-hex tiers must stay exactly as
-    # tested as the default configuration — this suite (and
-    # tools/fuzz_hybrid_spark.py) forces them on. Scoped via monkeypatch
-    # so collection-time import does NOT leak the overrides into other
-    # test modules (which must keep covering the shipped defaults).
-    monkeypatch.setenv("SPARK_GRAFT_CHAIN", "1")
-    monkeypatch.setenv("SPARK_GRAFT_HEX_TIER", "1")
-
 
 from ngxspark.fmtcompile import COMBINED_FMT, compile_format
 from ngxspark.parse import parse_lines
@@ -53,6 +40,21 @@ def test_hybrid_equals_arrow_combined(spark):
     assert a == h
     nulls = [r for r in h if r.text is None]
     assert nulls and nulls[0]._matched is False and nulls[0]._error == "null text"
+
+
+def test_hybrid_single_python_node_under_shuffle_filter(spark):
+    """A `_matched` filter above an Exchange must not duplicate the parse
+    UDF: make_parse_udf marks it non-deterministic so the filter is not
+    pushed below the shuffle, which would plan a second ArrowEvalPython
+    evaluating the whole parse on the pre-shuffle partitioning."""
+    plan = plan_struct(compile_format(COMBINED_FMT), ACCESS_BINDINGS)
+    df = spark.createDataFrame(
+        [(i, '1.2.3.4 - u [t] "GET / HTTP/1.1" 200 7 "-" "ua"') for i in range(4)],
+        "k int, text string",
+    )
+    out = parse_lines(df, plan).repartition(4, "k").filter(F.col("_matched"))
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    assert executed.count("ArrowEvalPython") == 1, executed
 
 
 def test_hybrid_double_digit_groups(spark):
@@ -131,9 +133,9 @@ def test_hybrid_escaped_default_dialect(spark):
 
 def test_hybrid_escaped_typed_field(spark):
     """A typed (int) bind whose raw segment contains \\x31 ('1') must
-    parse identically in both engines (since r5 the clean-hex value
-    unescapes on the JVM and the cast runs there too; the invalid-hex row
-    still falls to the Arrow tail for the exact reject)."""
+    parse identically in both engines (a typed bind with any backslash
+    falls to the Arrow tail, whose exact kernel unescapes before the
+    cast; the invalid-hex row gets the kernel's exact reject there too)."""
     plan = plan_struct(compile_format('"$v"x'), {"v": "int32"})
     assert plan.esc_aware
     lines = ['"\\x31\\x32"x', '"12"x', '"\\x3g"x']
@@ -146,27 +148,29 @@ def test_hybrid_escaped_typed_field(spark):
 
 
 def _tail_rows(spark, plan, lines, monkeypatch):
-    """Parse `lines` hybrid with tier metrics on; return (rows, arrow_rows)."""
+    """Parse `lines` hybrid with tier metrics on; return (rows, arrow_rows).
+
+    No orderBy: its range-partitioning sample job re-runs the observed
+    plan, and the observation then counts every row twice."""
     from ngxspark import parse as parse_mod
 
     monkeypatch.setenv("SPARK_GRAFT_PARSE_METRICS", "1")
     parse_mod.take_parse_tier_obs()  # drop any stale observations
     df = spark.createDataFrame([(x,) for x in lines], "text string")
-    rows = parse_lines(df, plan, engine="hybrid").orderBy(
-        F.col("text").asc_nulls_first()
-    ).collect()
+    rows = parse_lines(df, plan, engine="hybrid").collect()
     obs = parse_mod.take_parse_tier_obs()
     assert len(obs) == 1
     got = obs[0][1].get
+    assert got["rows"] == len(lines)
     monkeypatch.delenv("SPARK_GRAFT_PARSE_METRICS")
     return rows, got["arrow_rows"]
 
 
-def test_hex_escape_stays_jvm(spark, monkeypatch):
+def test_hex_escape_parity(spark, monkeypatch):
     """\\xHH values with bytes ≤ 0x7F (incl. every control byte the escape
-    writer can emit, escape.go:103) must parse with ZERO rows crossing to
-    the Arrow tier — the r4 verdict's top item (arrow_tail_share was 1.0
-    for parse_escaped_hex). Values must equal the exact kernel's."""
+    writer can emit, escape.go:103) must equal the exact kernel's values.
+    Hex rows cross to the Arrow tail; a value whose only escape is \\\\
+    stays on the JVM (regexp_replace unescape), so 4 of 5 rows are tail."""
     plan = plan_map(compile_format('"$ua" $n'))
     assert plan.esc_aware
     lines = [
@@ -177,7 +181,7 @@ def test_hex_escape_stays_jvm(spark, monkeypatch):
         '"esc-bs-then-x \\\\x41" 5',    # \\ then LITERAL x41 — not a hex escape
     ]
     rows, tail = _tail_rows(spark, plan, lines, monkeypatch)
-    assert tail == 0, f"hex rows crossed to Arrow: {tail}"
+    assert tail == 4, f"expected the 4 hex rows on the Arrow tail, got {tail}"
     got = {r.text: r for r in rows}
     assert got[lines[0]].ua == "hex A end"
     assert got[lines[1]].ua == "ctl \x00\x1f\x0a tab\x09"
@@ -211,30 +215,31 @@ def test_hex_escape_high_byte_and_malformed_parity(spark):
     assert got['"unk \\q" 5']._matched is False
 
 
-def test_json_named_and_unicode_stay_jvm(spark, monkeypatch):
-    """json named escapes and non-surrogate \\uXXXX unescape on the JVM
-    (zero Arrow rows); surrogates keep the exact kernel (parity only)."""
+def test_json_named_and_unicode_parity(spark, monkeypatch):
+    """json named escapes, non-surrogate \\uXXXX and surrogates all
+    unescape through the Arrow tail's exact kernel (every fast line
+    carries a named or \\u escape, so 3 of 3 are tail)."""
     from ngxspark.fmtcompile import compile_format as cf
 
     plan = plan_map(cf('escape=json;{"u":"$u","n":$n}'))
     assert plan.esc_aware_clean
-    fast_lines = [
+    named_lines = [
         '{"u":"tab\\there\\nnl \\u0041","n":1}',
         '{"u":"acc \\u00e9 snow \\u2603 max \\uffff","n":2}',
         '{"u":"bf \\b\\f\\r slash \\/ q \\" bs \\\\","n":3}',
     ]
-    rows, tail = _tail_rows(spark, plan, fast_lines, monkeypatch)
-    assert tail == 0, f"json escape rows crossed to Arrow: {tail}"
+    rows, tail = _tail_rows(spark, plan, named_lines, monkeypatch)
+    assert tail == 3, f"expected all 3 json escape rows on the Arrow tail, got {tail}"
     got = {r.text: r for r in rows}
-    assert got[fast_lines[0]].u == "tab\there\nnl A"
-    assert got[fast_lines[1]].u == "acc é snow ☃ max ￿"
-    assert got[fast_lines[2]].u == 'bf \b\f\r slash / q " bs \\'
+    assert got[named_lines[0]].u == "tab\there\nnl A"
+    assert got[named_lines[1]].u == "acc é snow ☃ max ￿"
+    assert got[named_lines[2]].u == 'bf \b\f\r slash / q " bs \\'
     surrogate_lines = [
         '{"u":"pair \\ud83c\\udf09","n":1}',   # valid pair → U+1F309
         '{"u":"lone \\ud83c end","n":2}',      # unpaired → U+FFFD
         '{"u":"bad \\u12","n":3}',             # truncated → reject
     ]
-    a, h = both_engines(spark, plan, fast_lines + surrogate_lines)
+    a, h = both_engines(spark, plan, named_lines + surrogate_lines)
     assert a == h
     hh = {r.text: r for r in h}
     assert hh['{"u":"pair \\ud83c\\udf09","n":1}'].u == "pair \U0001f309"

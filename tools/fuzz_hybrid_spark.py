@@ -7,10 +7,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-# exercise the opt-in split-chain tier (clean rows) and the opt-in JVM
-# hex/unicode unescape tier alongside the default regex/simple tiers
-os.environ.setdefault("SPARK_GRAFT_CHAIN", "1")
-os.environ.setdefault("SPARK_GRAFT_HEX_TIER", "1")
 from ngxspark.fmtcompile import compile_format
 from ngxspark.plan import plan_map, plan_struct
 from ngxspark.parse import parse_lines

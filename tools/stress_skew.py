@@ -1,9 +1,12 @@
 """Skew-stress for the dedup family (r6 verdict item 7; guide §2.5).
 
-Builds two equal-size corpora from the sf0.1 documents table:
+Builds two corpora from the sf0.1 documents table with the same rows
+and the same total text bytes, so key skew is their only difference:
 
 * uniform — K id-shifted replicas, every text made unique with a
-  replica tag (digests ~all distinct, LSH buckets small);
+  replica tag (digests ~all distinct, LSH buckets small); the rows the
+  skewed twin makes hot carry a unique random-token text of exactly
+  HOT_TEXT's length instead;
 * skewed  — same, except a HOT_FRAC fraction of ALL rows share ONE
   exact boilerplate text: one hot md5 digest, one hot normalized
   digest, one hot segment stream, and (identical docs ⇒ identical
@@ -27,6 +30,9 @@ op by op:
   uniform band; without the guard the hot bucket alone would expand
   (HOT_FRAC*N)^2/2 pairs (~12.5M at the defaults here — the run you
   do NOT want at 100 TB).
+
+Corpora are cached under /tmp, written to a temporary path and renamed
+into place only when complete.
 
 Usage: python tools/stress_skew.py [K=10] [HOT_FRAC_PCT=10]
 """
@@ -52,6 +58,19 @@ SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 HOT_TEXT = " ".join(
     f"boilerplate token {i} of the shared navigation chrome footer" for i in range(8)
 )
+# the guard timed in lsh_verified_pairs AND the threshold of its audit
+MAX_BUCKET = 50
+
+
+def _unique_filler(doc_id):
+    """A text of exactly len(HOT_TEXT) ASCII chars, unique per doc_id:
+    space-separated 8-hex-char tokens drawn from sha2(doc_id, j)."""
+    n_tokens = len(HOT_TEXT) // 9 + 1
+    tokens = [
+        F.substring(F.sha2(F.concat_ws(":", doc_id.cast("string"), F.lit(j)), 256), 1, 8)
+        for j in range(n_tokens)
+    ]
+    return F.substring(F.concat_ws(" ", *tokens), 1, len(HOT_TEXT))
 
 
 def main() -> None:
@@ -70,34 +89,41 @@ def main() -> None:
                 (F.col("doc_id") + i * 10_000_000).alias("doc_id"), "text", "source"
             )
         )
-    # uniform: every row's text unique-ified with its id
-    uniform = reps.withColumn(
-        "text", F.concat(F.col("text"), F.lit(" uniq "), F.col("doc_id"))
-    )
-    # skewed: HOT_PCT% of rows share ONE exact text (id % 100 < HOT_PCT
-    # is deterministic and spread across replicas/partitions)
-    skewed = reps.withColumn(
-        "text",
-        F.when(F.col("doc_id") % 100 < HOT_PCT, F.lit(HOT_TEXT)).otherwise(
-            F.concat(F.col("text"), F.lit(" uniq "), F.col("doc_id"))
-        ),
-    )
+    # HOT_PCT% of rows (id % 100 < HOT_PCT is deterministic and spread
+    # across replicas/partitions) are hot in the skewed twin; both twins
+    # give those rows a text of len(HOT_TEXT), the rest the same
+    # id-unique-ified text
+    hot = F.col("doc_id") % 100 < HOT_PCT
+    uniq = F.concat(F.col("text"), F.lit(" uniq "), F.col("doc_id"))
+    uniform = reps.withColumn("text", F.when(hot, _unique_filler(F.col("doc_id"))).otherwise(uniq))
+    skewed = reps.withColumn("text", F.when(hot, F.lit(HOT_TEXT)).otherwise(uniq))
     paths = {}
     for name, df in [("uniform", uniform), ("skewed", skewed)]:
-        p = f"/tmp/stress_skew_{os.path.basename(SRC.rstrip('/'))}_x{K}_h{HOT_PCT}_{name}.parquet"
+        p = f"/tmp/stress_skew_{os.path.basename(SRC.rstrip('/'))}_x{K}_h{HOT_PCT}_{name}_eqbytes.parquet"
         if not os.path.exists(p):
-            df.repartition(32).write.mode("overwrite").parquet(p)
+            tmp = f"{p}.tmp-{os.getpid()}"
+            df.repartition(32).write.mode("overwrite").parquet(tmp)
+            os.rename(tmp, p)
         paths[name] = p
     corp = {n: spark.read.parquet(p) for n, p in paths.items()}
-    n_rows = corp["uniform"].count()
+    size = {
+        n: c.agg(F.count(F.lit(1)), F.sum(F.octet_length("text"))).first()
+        for n, c in corp.items()
+    }
+    assert size["uniform"] == size["skewed"], f"twins differ in rows/text bytes: {size}"
+    n_rows, n_bytes = size["uniform"]
     n_hot = corp["skewed"].filter(F.col("text") == HOT_TEXT).count()
-    print(f"rows={n_rows} hot_rows={n_hot} ({100.0 * n_hot / n_rows:.1f}%)", flush=True)
+    print(
+        f"rows={n_rows} text_bytes={n_bytes} hot_rows={n_hot} "
+        f"({100.0 * n_hot / n_rows:.1f}%)",
+        flush=True,
+    )
 
     ops = {
         "dedup_exact": lambda d: dedup_exact(d),
         "dedup_segments": lambda d: dedup_segments(d),
         "lsh_candidate_groups": lambda d: lsh_candidate_groups(d),
-        "lsh_verified_pairs_guarded": lambda d: lsh_verified_pairs(d, max_bucket=50),
+        "lsh_verified_pairs_guarded": lambda d: lsh_verified_pairs(d, max_bucket=MAX_BUCKET),
     }
     for op_name, fn in ops.items():
         row = {}
@@ -114,10 +140,10 @@ def main() -> None:
 
     # guard audit: what did max_bucket excise on the skewed corpus?
     excluded = (
-        lsh_candidate_groups(corp["skewed"]).filter(F.col("n_docs") > 50).collect()
+        lsh_candidate_groups(corp["skewed"]).filter(F.col("n_docs") > MAX_BUCKET).collect()
     )
     print(
-        f"guard: {len(excluded)} bucket(s) over max_bucket=50 excluded; "
+        f"guard: {len(excluded)} bucket(s) over max_bucket={MAX_BUCKET} excluded; "
         f"sizes={sorted((r['n_docs'] for r in excluded), reverse=True)[:8]}",
         flush=True,
     )
